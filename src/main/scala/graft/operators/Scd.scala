@@ -2,6 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -116,6 +117,30 @@ object Scd {
       case Some(f) =>
         val kept = f.join(snap.select(key), Seq(key), "left_anti")
         kept.unionByName(snap) // snapshot rows win for all present keys
+    }
+  }
+
+  /** Fold a day-ordered sequence of SCD1 snapshots into one, such that
+    * `scd1Apply(fact, scd1Latest(snaps, key), key, attrs)` equals applying
+    * each snapshot in turn. Per key, the rows of the latest snapshot that
+    * holds it survive, duplicates within that snapshot included; NULL keys
+    * never match in the anti-join, so every snapshot's NULL-key rows
+    * survive, as they do in the chain. [[scd1Apply]] is an associative
+    * upsert, which is what makes the fold exact. One apply instead of one
+    * per snapshot: the nightly run receives the cumulative blacklist feed
+    * of every day so far.
+    */
+  def scd1Latest(snapshots: Seq[DataFrame], key: String): DataFrame = {
+    require(snapshots.nonEmpty, "scd1Latest: no snapshots")
+    if (snapshots.size == 1) snapshots.head
+    else {
+      val tagged = snapshots.zipWithIndex
+        .map { case (s, i) => s.withColumn("__snap", lit(i)) }
+        .reduce(_ unionByName _)
+      tagged
+        .withColumn("__last", max(col("__snap")).over(Window.partitionBy(key)))
+        .filter(col(key).isNull || col("__snap") === col("__last"))
+        .drop("__snap", "__last")
     }
   }
 

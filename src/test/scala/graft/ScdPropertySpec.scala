@@ -59,4 +59,38 @@ class ScdPropertySpec extends SparkSpec {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
     assert(res.passed, res.status.toString)
   }
+
+  // SCD1 rows: (key, attr); NULL keys included, since they never match
+  private type Rows = List[(String, String)]
+  private def rowsDf(rows: Rows): DataFrame = rows.toDF("key", "attr")
+  private def sorted(df: DataFrame): Seq[(String, String)] =
+    df.select("key", "attr").collect().toSeq
+      .map(r => (r.getString(0), r.getString(1))).sortBy(_.toString)
+
+  /** The sequential chain the nightly run used to apply, one feed at a
+    * time, against the one apply of the folded feeds. */
+  private def foldEqualsChain(init: Option[Rows], feeds: List[Rows]): Boolean = {
+    val start = init.map(rowsDf)
+    val chain = feeds.foldLeft(start)((state, f) =>
+      Some(Scd.scd1Apply(state, rowsDf(f), "key", attrs)))
+    val folded = Scd.scd1Apply(start, Scd.scd1Latest(feeds.map(rowsDf), "key"), "key", attrs)
+    sorted(chain.get) == sorted(folded)
+  }
+
+  test("SCD1: one apply of the folded feeds equals the sequential scd1Apply chain") {
+    // duplicate keys within a feed, a key a later feed drops, an empty feed
+    assert(foldEqualsChain(Some(List("k1" -> "a", "k2" -> "a")), List(
+      List("k1" -> "b", "k1" -> "c", "k3" -> "a"),
+      List(),
+      List("k3" -> "b", "k4" -> "a", "k4" -> "a", (null, "x")),
+      List("k4" -> "c", (null, "y")))))
+    val keyGen = Gen.frequency(8 -> Gen.oneOf("k1", "k2", "k3", "k4"), 1 -> Gen.const(null))
+    val rowsGen: Gen[Rows] = Gen.choose(0, 5).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(keyGen, Gen.oneOf("a", "b", "c"))))
+    val prop = Prop.forAll(Gen.option(rowsGen), Gen.choose(1, 4).flatMap(Gen.listOfN(_, rowsGen))) {
+      (init, feeds) => foldEqualsChain(init, feeds)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
+    assert(res.passed, res.status.toString)
+  }
 }
